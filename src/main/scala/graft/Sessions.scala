@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Master selection shared by the runtime mains (Verify / Bench).
+/** The one place a SparkSession is built: every main and the test
+  * suites go through [[build]], so every session loads
+  * [[GraftExtensions]] and shares the same base confs.
   *
   * `SPARK_GRAFT_MASTER` overrides the default `local[$cpus]` so the
   * SAME correctness sweep the driver runs single-JVM can be replayed
@@ -10,15 +12,41 @@ import org.apache.spark.sql.SparkSession
   * driver↔executor serialization boundaries, the closest local proxy
   * for a multi-node cluster. A local-cluster master spawns executors
   * as fresh processes, so this build's classes and the Java 17 module
-  * opens Spark needs must ride along in executor conf (the same set
-  * `tools.FaultProbe` uses); the caller must export
+  * opens Spark needs must ride along in executor conf; the caller must export
   * `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13` so the worker can
   * assemble the executor command line.
   */
 object Sessions {
+  /** `SPARK_GRAFT_CPUS`, else the cores this JVM sees. */
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  /** Build (or return the live) session: the master from [[withMaster]]
+    * (or [[applyMaster]] when a probe pins `master`), `cpus` shuffle
+    * partitions, UTC, nanos-tolerant parquet, no UI, the engine's
+    * extensions, and WARN logging. `conf` is applied last, so it adds
+    * or overrides any of these confs. */
+  def build(cpus: String = defaultCpus, conf: Map[String, String] = Map.empty,
+            master: Option[String] = None): SparkSession = {
+    val b = master match {
+      case Some(m) => applyMaster(SparkSession.builder(), m, None)
+      case None => withMaster(SparkSession.builder(), cpus)
+    }
+    val spark = b
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .config(conf)
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Java 17 module opens Spark's executor JVMs require (mirrors the
     * sbt fork options; kept in one place for every local-cluster user). */
-  val addOpens: String = Seq(
+  private val addOpens: String = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Executor-loss fault injection for the batch ITERATIVE family
   * (q48/q59 connected components, q115 PageRank, q124 incremental
   * dedup). The claim under test is the one Lineage.scala makes in
@@ -29,8 +27,6 @@ import org.apache.spark.sql.SparkSession
   * Exit 0 = every query PASS; 1 = any FAIL/UNTESTED.
   */
 object FaultProbe {
-  private val addOpens = graft.Sessions.addOpens
-
   /** The executor JVMs are direct children of this process: the
     * local-cluster Workers run in-process and spawn executors via
     * ProcessBuilder. Match on command line when /proc exposes it
@@ -50,25 +46,15 @@ object FaultProbe {
     val prefixes = args.drop(1).headOption
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(Seq("q48", "q59", "q115", "q124"))
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .appName("graft-fault-probe")
-      .config("spark.executor.memory", "1536m")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // the claim under test: reliable lineage cuts survive executor loss
-      .config("graft.checkpoint.reliable", "true")
-      // a killed executor fails its in-flight tasks; allow generous
-      // retries so the RESCHEDULING path (not abort) is what's probed
-      .config("spark.task.maxFailures", "8")
-      .config("spark.stage.maxConsecutiveAttempts", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("8", master = Some("local-cluster[2,4,2048]"),
+      conf = Map(
+        "spark.executor.memory" -> "1536m",
+        // the claim under test: reliable lineage cuts survive executor loss
+        "graft.checkpoint.reliable" -> "true",
+        // a killed executor fails its in-flight tasks; allow generous
+        // retries so the RESCHEDULING path (not abort) is what's probed
+        "spark.task.maxFailures" -> "8",
+        "spark.stage.maxConsecutiveAttempts" -> "8"))
 
     val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1).filter {
       case (n, _) => prefixes.exists(n.startsWith)

@@ -55,7 +55,7 @@ object SpillProbe {
     val outDir = args(1)
     val poolMb = args(2).toLong
     val prefixes = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.Sessions.defaultCpus
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes(n.takeWhile(_ != '_')) }
@@ -70,26 +70,17 @@ object SpillProbe {
       // sibling tasks hold the pool mid-spill); production absorbs that
       // by retrying the task on another executor — default local mode
       // (maxFailures=1) instead kills the job on the first transient.
-      val b = SparkSession.builder()
-        .master(s"local[$cpus,4]")
-        .appName(if (constrained) "graft-spill-constrained" else "graft-spill-baseline")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-      if (constrained) {
-        b.config("spark.testing.memory", (poolMb << 20).toString)
+      val pool =
+        if (constrained) Map("spark.testing.memory" -> (poolMb << 20).toString,
           // the 300 MB production floor would force the pool above the
           // pressure point this probe exists to create
-          .config("spark.testing.reservedMemory", "0")
-      }
-      b.getOrCreate()
+          "spark.testing.reservedMemory" -> "0")
+        else Map.empty[String, String]
+      graft.Sessions.build(cpus, pool, master = Some(s"local[$cpus,4]"))
     }
 
     val sections = Seq(true, false).map { constrained =>
       val spark = session(constrained)
-      spark.sparkContext.setLogLevel("WARN")
       val listener = new SpillListener
       spark.sparkContext.addSparkListener(listener)
       val sub = if (constrained) "constrained" else "baseline"

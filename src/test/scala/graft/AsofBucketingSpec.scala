@@ -139,6 +139,17 @@ class AsofBucketingSpec extends SparkSpec {
     assert(native.map(_.toSeq).toSeq == composed.map(_.toSeq).toSeq)
   }
 
+  test("q47's registry plan executes through the native AsofJoinExec") {
+    // the as-of strategy reaches the planner only through
+    // GraftExtensions, which Sessions.build loads into every session
+    val q47 = SparkEntry.queries("q47_asof_native")(spark, sf())
+    assert(q47.collect().nonEmpty)
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = q47.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case e: graft.plans.AsofJoinExec => e }.nonEmpty,
+      s"q47 planned without AsofJoinExec:\n$plan")
+  }
+
   test("property: native and composed asof agree on random ledgers (5 seeds)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

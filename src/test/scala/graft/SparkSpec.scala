@@ -4,20 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession
-  * (getOrCreate), local[4], UTC, nanos-tolerant. */
+  * (getOrCreate) from `Sessions.build`: local[4] (or
+  * SPARK_GRAFT_MASTER), 4 shuffle partitions, the engine's extensions. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = Sessions.build("4",
     // FAIR so ConcurrentServingSpec can exercise multi-tenant pools
     // (scheduler mode is fixed at context creation); single-query
     // suites are unaffected — one pool, one job at a time
-    .config("spark.scheduler.mode", "FAIR")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    conf = Map("spark.scheduler.mode" -> "FAIR"))
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TradeValidation
 
 class ValidationExtensionsSpec extends SparkSpec {
@@ -48,12 +46,7 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("float_vec_dot is callable from SQL once registered") {
-    // same builder GraftExtensions injects, bound to the live session's
-    // registry (withExtensions only applies to fresh contexts)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_vec_dot",
-      exprs => graft.functions.FloatVecDot(exprs.head, exprs(1)),
-      "scala_udf")
+    // registered by GraftExtensions, which every Sessions.build session loads
     val r = spark.sql(
       "SELECT float_vec_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>), " +
         "CAST(array(3.0, 4.0) AS ARRAY<FLOAT>)) AS d").collect().head.getDouble(0)
@@ -64,17 +57,6 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("bottom_k and count_min aggregates are callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k",
-      exprs => graft.functions.BottomK(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_graft",
-      exprs => graft.functions.CountMinAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
     Seq("c", "a", "b", "a").toDF("v").createOrReplaceTempView("gx_vals")
     val bk = spark.sql("SELECT bottom_k(v, 2) AS b FROM gx_vals")
       .collect().head.getSeq[String](0)
@@ -85,14 +67,6 @@ class ValidationExtensionsSpec extends SparkSpec {
   }
 
   test("int8_vec_dot and zorder2 are callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_vec_dot",
-      exprs => graft.functions.Int8VecDot(exprs.head, exprs(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2",
-      exprs => graft.functions.ZOrder2(exprs.head, exprs(1)),
-      "scala_udf")
     val d = spark.sql(
       "SELECT int8_vec_dot(CAST(array(1, -2) AS ARRAY<TINYINT>), " +
         "CAST(array(3, 4) AS ARRAY<TINYINT>)) AS d").collect().head.getLong(0)
@@ -101,11 +75,25 @@ class ValidationExtensionsSpec extends SparkSpec {
     assert(z == 10L) // bits of 3 land in the odd interleave positions
   }
 
+  /** The builder's failure message, wherever the analyzer wrapped it. */
+  private def failure(sql: String): String = {
+    def chain(t: Throwable): List[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) :: chain(t.getCause)
+    chain(intercept[Exception](spark.sql(sql).collect())).mkString("\n")
+  }
+
+  test("an injected function with the wrong arity fails with its usage") {
+    assert(failure("SELECT float_vec_dot(CAST(array(1.0) AS ARRAY<FLOAT>))")
+      .contains("float_vec_dot(a, b) takes two arguments"))
+  }
+
+  test("an injected aggregate rejects a non-constant size argument") {
+    Seq(("a", 1), ("b", 2)).toDF("v", "n").createOrReplaceTempView("gx_sizes")
+    assert(failure("SELECT bottom_k(v, n) FROM gx_sizes")
+      .contains("bottom_k: k must be a constant"))
+  }
+
   test("pcm_fold is callable from SQL once registered") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_fold",
-      exprs => graft.functions.PcmFold(exprs.head),
-      "scala_udf")
     // canonical 44-byte-header WAV, fmt=1 (PCM), 16-bit, two samples:
     // +1 and -2 → n=2, sum=-1, peak=2
     val hdr = Array[Byte]('R', 'I', 'F', 'F', 0, 0, 0, 0,
