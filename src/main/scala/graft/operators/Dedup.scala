@@ -155,7 +155,9 @@ object Dedup {
     * worst both compute the same verdict. The memo is capacity-bounded
     * by EVICTING one arbitrary entry past 256 — not by clearing the
     * whole map, which would forget all 256 verdicts (and re-run every
-    * pre-flight) the moment a long session touched its 257th corpus. */
+    * pre-flight) the moment a long session touched its 257th corpus.
+    * Not a [[graft.sources.Scaffold.once]] site for those reasons:
+    * Scaffold never evicts, caches no failure and serializes builds. */
   private[graft] val guardMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Double, Long), Option[String]]()
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{PriceSink, Tables, TableStore, TempDirs, UniverseCsv}
+import graft.sources.{PriceSink, Scaffold, Tables, TableStore, TempDirs, UniverseCsv}
 import graft.operators.{Bucketing, Skew}
 
 /** Driver-verified queries over the source/sink boundary and the scale
@@ -161,24 +161,19 @@ object SourceQueries {
     * entire point of `bucketBy`, see Bucketing's doc); rebuilding both
     * layouts plus their catalog DDL every call measured ~2 s of the
     * query's ~2.9 s at sf0.1 (optimization r19, single-query probe).
-    * The q89Layout/q97Layout/q98Layout scaffolding discipline applies:
-    * trial 1 pays the build (visible in the bench trial matrix and the
-    * storeCommitQs floor), steady state measures the JOIN + aggregate.
-    * Table names carry a per-sfDir tag so two fixtures in one JVM never
-    * clobber each other's catalog entries; a memo hit re-validates both
-    * data dirs AND catalog entries (the IvfIndexStore hit-check lesson,
-    * ADVICE r18) and rebuilds when either was cleaned. */
-  private val q44LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String, String)]
-
+    * Built through [[Scaffold.once]]: trial 1 pays the build (visible
+    * in the bench trial matrix and the storeCommitQs floor), steady
+    * state measures the JOIN + aggregate. Table names carry a per-sfDir
+    * tag so two fixtures in one JVM never clobber each other's catalog
+    * entries; a hit re-validates both data dirs AND catalog entries and
+    * rebuilds when either was cleaned. */
   private def q44Tables(spark: SparkSession, sfDir: String): (String, String) = {
     def valid(e: (String, String, String)): Boolean = e match {
       case (dir, liT, oT) =>
-        new java.io.File(s"$dir/lineitem").isDirectory &&
-          new java.io.File(s"$dir/orders").isDirectory &&
+        Scaffold.has("lineitem", "orders")(dir) &&
           spark.catalog.tableExists(liT) && spark.catalog.tableExists(oT)
     }
-    val entry = q44LayoutCache.get(sfDir).filter(valid).getOrElse {
+    val entry = Scaffold.once(s"q44|$sfDir", valid) {
       val tmp = TempDirs.create("graft_q44").toFile.getAbsolutePath
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(sfDir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
@@ -195,9 +190,7 @@ object SourceQueries {
         Tables.orders(spark, sfDir).select("o_orderkey", "o_orderpriority"),
         oT, buckets = 8, keys = Seq("o_orderkey"),
         path = Some(s"$tmp/orders"))
-      val e = (tmp, liT, oT)
-      q44LayoutCache.put(sfDir, e)
-      e
+      (tmp, liT, oT)
     }
     (entry._2, entry._3)
   }
@@ -397,11 +390,8 @@ object SourceQueries {
     * invocations (bench warm-up + measured runs, spec + query in one
     * session) reuse the first write instead of re-partitioning the fact
     * table every time. */
-  private val q89LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def q89Layout(spark: SparkSession, sfDir: String): String =
-    q89LayoutCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q89|$sfDir", Scaffold.has("fact", "calendar")) {
       val tmp = TempDirs.create("graft_q89").toFile.getAbsolutePath
       val li = Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"),
@@ -419,7 +409,7 @@ object SourceQueries {
           expr("(cast(substring(ship_month, 6, 2) as int) - 1) div 3 + 1"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/calendar")
       tmp
-    })
+    }
 
   /** q89 joined frame before the final sort — factored out so DppSpec
     * can assert the plan shape on the exact frame the query runs. */
@@ -460,18 +450,14 @@ object SourceQueries {
     * q86 does — the file-count invariant survives because the writer
     * split is per partition-directory, not per task. */
   /** One degenerate small-file layout per (JVM, sfDir) — the INPUT
-    * q97 compacts, not the thing being timed (the q89Layout/q98Layout
-    * scaffolding discipline, applied here in optimization r19: the
-    * Q97Probe decomposition measured the layout build at ~1.0 s of the
-    * query's ~3.6 s steady state, bench/probe_r19_q97.json — a third
+    * q97 compacts, not the thing being timed, so it is built through
+    * [[Scaffold.once]] (optimization r19: the Q97Probe decomposition
+    * measured the layout build at ~1.0 s of the query's ~3.6 s steady state, bench/probe_r19_q97.json — a third
     * of the bill for regenerating the same 160 tiny files every
     * trial). At 100 TB the small-file mess EXISTS; compaction's cost
     * is read + rewrite, which stays fully inside the timed window. */
-  private val q97LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def q97Layout(spark: SparkSession, sfDir: String): String =
-    q97LayoutCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q97|$sfDir", Scaffold.has("small")) {
       val tmp = TempDirs.create("graft_q97").toFile.getAbsolutePath
       // degenerate source layout: 32 hash-spread writers → up to 32
       // tiny files in every partition directory
@@ -480,7 +466,7 @@ object SourceQueries {
           round(col("value") * 1e6).cast("long").as("value_micro"))
         .repartition(32).write.partitionBy("event_type").parquet(s"$tmp/small")
       tmp
-    })
+    }
 
   def q97Compaction(spark: SparkSession, sfDir: String): DataFrame = {
     val small = s"${q97Layout(spark, sfDir)}/small"
@@ -503,11 +489,8 @@ object SourceQueries {
 
   /** One manifest-backed sorted layout per (JVM, sfDir) — scaffolding
     * for q98's pruned scan, not the thing being timed. */
-  private val q98LayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def q98Layout(spark: SparkSession, sfDir: String): String =
-    q98LayoutCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q98|$sfDir", Scaffold.has("fact", "manifest")) {
       val tmp = TempDirs.create("graft_q98").toFile.getAbsolutePath
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_returnflag"),
@@ -532,7 +515,7 @@ object SourceQueries {
         .write.mode("overwrite").partitionBy("lo_month")
         .parquet(s"$tmp/manifest")
       tmp
-    })
+    }
 
   /** Scan planning against the q98 manifest: list the files whose
     * [lo, hi] range intersects [dateLo, dateHi]. Two prune layers:
@@ -606,16 +589,6 @@ object SourceQueries {
 
   // ---- q143: bloom-filter file skipping -----------------------------
 
-  /** Per-file bloom index over `l_orderkey`, built once per (JVM,
-    * sfDir) off the q98 fact layout. One aggregation pass produces, per
-    * file: the bloom words, and the min/max key the spec uses to prove
-    * that range stats CANNOT prune these lookups. This is the
-    * Iceberg/Delta secondary bloom index shape: maintained at commit
-    * time in a real store, kilobytes per file, read only by the
-    * planner. */
-  private val q143IndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** ~14 bits/key → fp ≈ 2e-3, sized at BUILD time from the layout's
     * rows-per-file — the commit-time ndv sizing real stores do (parquet
     * column blooms, Delta `numDistinctValues`). A FIXED size is a scale
@@ -633,23 +606,27 @@ object SourceQueries {
     bits
   }
 
-  private val q143ParamsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
-
   /** (numBits, k) a store's index was built with — driver metadata off
     * one index row; every probe of that index must use these. Cached
     * per path: params are fixed at build time and every later commit
     * rewrites with the SAME params (q151Commit/q158), so one metadata
     * read serves the store's lifetime. */
   private def q143Params(spark: SparkSession, indexPath: String): (Int, Int) =
-    q143ParamsCache.getOrElseUpdate(indexPath, {
+    Scaffold.once(s"q143params|$indexPath", (_: (Int, Int)) => true) {
       val r = spark.read.parquet(indexPath)
         .select("bloom_bits", "bloom_k").head()
       (r.getInt(0), r.getInt(1))
-    })
+    }
 
+  /** Per-file bloom index over `l_orderkey`, built once per (JVM,
+    * sfDir) off the q98 fact layout. One aggregation pass produces, per
+    * file: the bloom words, and the min/max key the spec uses to prove
+    * that range stats CANNOT prune these lookups. This is the
+    * Iceberg/Delta secondary bloom index shape: maintained at commit
+    * time in a real store, kilobytes per file, read only by the
+    * planner. */
   private def q143Index(spark: SparkSession, sfDir: String): String =
-    q143IndexCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q143|$sfDir", Scaffold.has("fact", "bloom_index")) {
       val tmp = q98Layout(spark, sfDir)
       val fact = spark.read.parquet(s"$tmp/fact")
       val nFiles = math.max(1L,
@@ -665,7 +642,7 @@ object SourceQueries {
         .withColumn("bloom_k", lit(Q143K))
         .write.mode("overwrite").parquet(s"$tmp/bloom_index")
       tmp
-    })
+    }
 
   /** The lookup keys: the 3 smallest distinct orderkeys in a fixed
     * residue class — a deterministic, oracle-reproducible stand-in for
@@ -749,16 +726,13 @@ object SourceQueries {
     * — path + bloom + key range per file, i.e. the planning stats a
     * real store maintains at commit time. Exposed for the spec that
     * pins the commit-protocol consistency contract. */
-  private val q151StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q151StoreDir(spark: SparkSession, sfDir: String): String =
-    q151StoreCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q151|$sfDir", Scaffold.has("_current")) {
       val tmp = q143Index(spark, sfDir)
       val dir = TempDirs.create("graft_q151store").toFile.getAbsolutePath
       TableStore.commit(spark, dir, spark.read.parquet(s"$tmp/bloom_index"))
       dir
-    })
+    }
 
   /** q151: targeted delete (the right-to-be-forgotten shape) — remove
     * three orderkeys from the immutable-file store by rewriting ONLY
@@ -849,12 +823,10 @@ object SourceQueries {
     * newest version only. The intermediate version's rewritten files
     * become unreferenced and are physically reclaimed; the base FACT
     * files live outside the store's own tree and are never touched. */
-  private val q158StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Int, Int, Int)]
-
   def q158VacuumedStore(spark: SparkSession, sfDir: String)
       : (String, Int, Int, Int) =
-    q158StoreCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q158|$sfDir",
+        (e: (String, Int, Int, Int)) => Scaffold.has("_current")(e._1)) {
       val tmp = q143Index(spark, sfDir)
       val dir = TempDirs.create("graft_q158store").toFile.getAbsolutePath
       TableStore.commit(spark, dir, spark.read.parquet(s"$tmp/bloom_index"))
@@ -893,7 +865,7 @@ object SourceQueries {
       val (droppedManifests, deletedFiles) =
         TableStore.vacuum(spark, dir, retain = 1)
       (dir, rw1, droppedManifests, deletedFiles)
-    })
+    }
 
   /** q158: retention GC (VACUUM) for the committed store — the
     * operation that makes an immutable-file table affordable to run
@@ -924,11 +896,9 @@ object SourceQueries {
     * and DECLARES its backfill default in the commit metadata — the
     * default versions with the file list, exactly like a Delta
     * column-default table property. Old files are never rewritten. */
-  private val q157StoreCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   def q157StoreDir(spark: SparkSession, sfDir: String): String =
-    q157StoreCache.getOrElseUpdate(sfDir, {
+    Scaffold.once(s"q157|$sfDir",
+        Scaffold.has("_current", "files/gen1", "files/gen2")) {
       val dir = TempDirs.create("graft_q157").toFile.getAbsolutePath
       val orders = Tables.orders(spark, sfDir)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -950,7 +920,7 @@ object SourceQueries {
       TableStore.commit(spark, dir, man1.unionByName(man2),
         meta = Map("default.priority_rank" -> "-1"))
       dir
-    })
+    }
 
   /** q157: schema evolution on read, THROUGH the commit protocol. A
     * store that lives for years gains columns; the contract a 100 TB

@@ -1,6 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Fingerprint-keyed DERIVED tables on [[TableStore]] — the build-once
@@ -31,16 +30,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * contract that makes reuse safe.
   */
 object DerivedStore {
-
-  // committed data-file paths, memoized per (storeDir | fingerprint) so
-  // repeat calls within a session skip even the pointer read
-  private val memo = TrieMap.empty[String, Seq[String]]
-
-  /** Specs simulate a fresh JVM by dropping the memo — the STORE, not
-    * the memo, must then satisfy the next call. */
-  private[graft] def clearMemo(): Unit = memo.clear()
-  // run-scoped store roots for sessions that configure none
-  private val tempDirs = TrieMap.empty[String, String]
 
   /** Identity of `df`'s physical inputs: sorted (path, length, mtime)
     * digested MD5 (content identity, not crypto). Stat failures hash a
@@ -74,17 +63,27 @@ object DerivedStore {
                   sfDir: String): String =
     spark.conf.getOption(confKey)
       .map(root => s"$root/${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}")
-      .getOrElse(tempDirs.getOrElseUpdate(s"$name|$sfDir",
+      .getOrElse(Scaffold.once(s"derived-root|$name|$sfDir", Scaffold.has())(
         TempDirs.create(s"graft_derived_$name").toString))
 
   /** Read-or-build: the committed data files for (`storeDir`, `fp`).
     * `build(dataDir)` writes the derived parquet when no committed
     * version carries `fp`; the commit is CAS-guarded, and a lost race
     * re-reads the winner's version (same fingerprint = same content —
-    * the derivation is deterministic by contract). */
+    * the derivation is deterministic by contract). The file list is
+    * memoized per (storeDir | fp) through [[Scaffold.once]], so repeat
+    * calls skip even the pointer read; a hit stats its files through
+    * each path's own Hadoop FileSystem, as [[fingerprint]] does. */
   def filesFor(spark: SparkSession, storeDir: String, fp: String)
-              (build: String => Unit): Seq[String] =
-    memo.getOrElseUpdate(s"$storeDir|$fp", {
+              (build: String => Unit): Seq[String] = {
+    def present(files: Seq[String]): Boolean = {
+      val conf = spark.sessionState.newHadoopConf()
+      files.forall { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(conf).exists(p)
+      }
+    }
+    Scaffold.once(s"derived|$storeDir|$fp", present) {
       def committed(): Option[Seq[String]] =
         TableStore.currentVersion(storeDir)
           .map(v => TableStore.Snapshot(storeDir, v))
@@ -149,7 +148,8 @@ object DerivedStore {
         }
       }
       result
-    })
+    }
+  }
 
   /** Age horizon for the commit-time opportunistic [[vacuum]]:
     * deliberately conservative — 24 h is far longer than any single

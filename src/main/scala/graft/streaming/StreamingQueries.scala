@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import graft.sources.TempDirs
+import graft.sources.{Scaffold, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -187,11 +187,11 @@ object StreamingQueries {
           srcDir.toString, k.toInt)
     }
 
-  /** Staged source directories memoized per (shape, fixture, params)
-    * within one JVM — INPUT scaffolding, the q124SigStore / q89Layout /
-    * q97Layout discipline (optimization r19). The staged backlog is a
-    * deterministic derived LAYOUT of the fixture (same rows, same
-    * slice membership every time): it is the input a deployed stream
+  /** Staged source directories built once per (shape, fixture, params)
+    * within one JVM through [[Scaffold.once]] — INPUT scaffolding
+    * (optimization r19); a hit whose dir was reaped restages. The
+    * staged backlog is a deterministic derived LAYOUT of the fixture
+    * (same rows, same slice membership every time): it is the input a deployed stream
     * finds on its source bucket, not part of the computation under
     * test — and restaging it per invocation was a full Spark write job
     * inside every streaming query's timed window (StreamFloorProbe r18
@@ -203,15 +203,12 @@ object StreamingQueries {
     * every parameter that changes the staged bytes (fixture dir,
     * column list, slice count), so a probe that re-stages with
     * different splits gets its own directory. */
-  private val stagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def stagedOnce(key: String)(build: String => Unit): String =
-    stagedDirs.getOrElseUpdate(key, {
+    Scaffold.once(s"staged|$key", Scaffold.has()) {
       val src = TempDirs.create("graft_stream_src").resolve("src").toString
       build(src)
       src
-    })
+    }
 
   /** Stage `df` into `src` as ordered micro-batch files with ONE write
     * job: partition the frame by the batch ordinal (`ord`, 0..k-1),

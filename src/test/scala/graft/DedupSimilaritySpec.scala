@@ -204,6 +204,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(graft.queries.PipelineQueries.q124OldSigs(spark, sf()) ==
       graft.queries.PipelineQueries.q124OldSigs(spark, sf()),
       "old-corpus store must be memoized, not rebuilt per call")
+    // a memoized store whose dir was reaped is rebuilt, not served
+    val old = graft.queries.PipelineQueries.q124OldSigs(spark, sf())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(old))
+    val c = graft.queries.PipelineQueries.q124IncrementalDedup(spark, sf()).collect()
+    assert(c.sameElements(a))
+    assert(graft.queries.PipelineQueries.q124OldSigs(spark, sf()) != old,
+      "a reaped old-corpus store must be rebuilt into a new dir")
   }
 
   test("minhash LSH recovers pairs that brute-force jaccard finds") {

@@ -473,5 +473,11 @@ class StorageOpsSpec extends SparkSpec {
     val backfilled = SourceQueries.q157EvolvedRead(spark, sf("sf0.01"))
       .agg(sum("n_backfilled")).collect()(0).getLong(0)
     assert(backfilled == evens, s"backfilled=$backfilled evens=$evens")
+    // a memoized store whose dir was reaped is rebuilt, not served
+    val rows = SourceQueries.q157EvolvedRead(spark, sf("sf0.01")).collect()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    assert(SourceQueries.q157EvolvedRead(spark, sf("sf0.01")).collect().sameElements(rows))
+    assert(SourceQueries.q157StoreDir(spark, sf("sf0.01")) != dir,
+      "a reaped q157 store must be rebuilt into a new dir")
   }
 }
